@@ -40,6 +40,21 @@ object Bench {
       pins: Map[String, Double]): Seq[String] =
     best.collect { case (n, t) if t >= 0 && pins.get(n).exists(t > _) => n }
 
+  /** The suite total as a JSON value: `null` when any query failed
+    * (-1), so a broken query can never make the suite look faster. */
+  private[graft] def totalJson(best: Seq[(String, Double)]): String =
+    if (best.exists(_._2 < 0)) "null" else "%.6f".format(best.map(_._2).sum)
+
+  /** The compact fields both JSON lines end with: the failed queries
+    * by name, the total over the queries that ran, and the suite
+    * total. */
+  private[graft] def totalsJson(best: Seq[(String, Double)]): String = {
+    val failed = best.collect { case (n, t) if t < 0 => "\"" + n + "\"" }
+    val ok = "%.6f".format(best.map(_._2).filter(_ >= 0).sum)
+    s""""n_failed":${failed.size},"failed":${failed.mkString("[", ",", "]")},""" +
+      s""""total_ok":$ok,"total_best":${totalJson(best)}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -114,7 +129,8 @@ object Bench {
     val loadsJson = raw
       .map { case (l0, l1, _) => s"[${fmt(l0)},${fmt(l1)}]" }
       .mkString("[", ",", "]")
-    val total = best.map(_._2).filter(_ >= 0).sum
+    val total = totalJson(best)
+    val totals = totalsJson(best)
     // Pinned-threshold self-audit (round-5 verdict #1): compare each
     // best-of against the checked-in per-query ceilings (BENCH_PINS
     // .json, ~2.5x a clean same-box round-6 run at sf0.1) and list the
@@ -140,7 +156,7 @@ object Bench {
     // dict necessarily also holds the ~100-byte stamps + audit after it
     // (round-5 put pass_loads BEFORE the 94-entry queries dict and the
     // driver's capture truncated exactly the stamps; third ask, fixed).
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":$passJson,"queries":$qs,"pass_loads":$loadsJson,"suspect":$suspect,"total_best":${fmt(total)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passJson,"queries":$qs,"pass_loads":$loadsJson,"suspect":$suspect,$totals}"""
     println(line)
     // Round-14 verdict #2 (ADDITIVE — the timing loop and the line
     // above are untouched): the record keeper stores only a ~2000-char
@@ -160,7 +176,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] result file write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${names.size},"pass_loads":$loadsJson,"suspect":$suspect,"total_best":${fmt(total)},"result_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_RESULT.json")}"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${names.size},"pass_loads":$loadsJson,"suspect":$suspect,$totals,"result_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_RESULT.json")}"}""")
     spark.stop()
   }
 }

@@ -12,7 +12,8 @@ import java.nio.file.{Files, Paths}
   * (/root/reference/src/cosmap/entrypoint.py:46-60 →
   * /root/reference/src/cosmap/api/cmds.py:20-47), end to end:
   * registry lookup of `base-analysis`, config merge, sampler, cone
-  * join, compiled DAG, append sink, progress + count accounting.
+  * join (the sky-cell equi-join, `useBandJoin = true`), compiled DAG,
+  * append sink, progress + count accounting.
   *
   * Usage: RunAnalysis <runConfig.json> <catalogParquet> [registryDir]
   * The run config's "output" key names the sink path; "write_format"
@@ -43,7 +44,7 @@ object RunAnalysis {
       val catalog = spark.read.parquet(catalogPath)
       val out = AnalysisRunner.runParsed(spark, runConfig,
         ConfigTree.parse(defaults), transformations, registry, catalog,
-        useBandJoin = false, plugins = graft.pipeline.PluginManager.empty)
+        useBandJoin = true, plugins = graft.pipeline.PluginManager.empty)
       val expected = AnalysisRunner.parseSampling(
         AnalysisRunner.effectiveConfig(runConfig, ConfigTree.parse(defaults)))
         .nSamples

@@ -39,7 +39,7 @@ object ConeContainsKernel {
   * can only execute it as a nested-loop theta join; the
   * [[graft.plans.ConeJoinRewrite]] optimizer rule (installed by
   * `graft.GraftExtensions`) recognizes it in an inner-join condition
-  * and rewrites the join to the dec-band equi-join plan with this
+  * and rewrites the join to the sky-cell equi-join plan with this
   * same predicate left as the exact residual — so results are
   * identical by construction and the rewrite is purely a physical
   * improvement. */
@@ -95,7 +95,7 @@ case class ConeContains(ra: Expression, dec: Expression,
   * analog for Rectangle samples; semantics of
   * [[graft.plans.RectJoin]]): |dec − sDec| ≤ height/2 AND
   * wraparound-safe RA distance × cos(sDec) ≤ width/2. Rewritten to a
-  * band equi-join by [[graft.plans.ConeJoinRewrite]] when used as an
+  * sky-cell equi-join by [[graft.plans.ConeJoinRewrite]] when used as an
   * inner-join conjunct. */
 case class RectContains(ra: Expression, dec: Expression,
                         sRa: Expression, sDec: Expression,

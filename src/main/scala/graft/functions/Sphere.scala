@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, graftbridge}
+import org.apache.spark.sql.catalyst.expressions.{Abs, Add, Cos, Divide, Expression,
+  GreaterThanOrEqual, If, Least, Literal, ToRadians}
 import org.apache.spark.sql.functions._
 
 /** Spherical-geometry column algebra.
@@ -54,13 +56,20 @@ object Sphere {
 
   /** Safe half-width of the RA interval covered by a cone of
     * `radiusDeg` centered at declination `decDeg`: the linear bound
-    * r / cos(|dec|+r), clamped to 180° near the poles. Always ≥ the
+    * r / cos(|dec|+r), and 180° (every RA) once the cone comes within
+    * 0.1° of a pole, where that bound stops being sound. Always ≥ the
     * true extent asin(sin r / cos dec) — soundness is property-tested
     * (the reference's version at
     * /root/reference/src/cosmap/dataset/opencosmo.py:42-50 is both
     * unwidened and sign-buggy at line 48; fixed here, not replicated). */
-  def raPad(decDeg: Column, radiusDeg: Column): Column = {
-    val edge = least(lit(89.9), abs(decDeg) + radiusDeg)
-    least(lit(180.0), radiusDeg / cos(radians(edge)))
+  def raPad(decDeg: Column, radiusDeg: Column): Column =
+    graftbridge.toColumn(raPadExpr(
+      graftbridge.toExpression(decDeg), graftbridge.toExpression(radiusDeg)))
+
+  /** [[raPad]] as a Catalyst expression, for plan rewrites. */
+  def raPadExpr(decDeg: Expression, radiusDeg: Expression): Expression = {
+    val edge = Add(Abs(decDeg), radiusDeg)
+    If(GreaterThanOrEqual(edge, Literal(89.9)), Literal(180.0),
+      Least(Seq(Literal(180.0), Divide(radiusDeg, Cos(ToRadians(edge))))))
   }
 }

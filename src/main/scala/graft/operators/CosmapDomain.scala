@@ -52,7 +52,7 @@ object CosmapDomain {
   val QuickstartRadiusDeg: Double = 2.0 / 60.0
 
   val queries: Map[String, Q] = Map(
-    // -- cone theta-join via the dec-band equi-join rewrite, + per-
+    // -- cone theta-join via the sky-cell equi-join rewrite, + per-
     //    sample aggregate. The oracle states the same query as a raw
     //    theta-join: band rewrite ≡ theta join is thereby gate-checked.
     "q31_cone_join_agg" -> { (s, dir) =>
@@ -88,7 +88,7 @@ object CosmapDomain {
     "q68_cone_centroid" -> coneCentroid,
 
     // -- Rectangle sample join (EXCEEDS the reference, which errors
-    //    on non-Circle shapes — verdict stretch item #9): dec-band
+    //    on non-Circle shapes — verdict stretch item #9): sky-cell
     //    equi-join rewrite gate-checked against the raw declarative
     //    predicate in DuckDB. Half-extents 19.97/9.97 sit off the
     //    0.1° lattice (same ulp-safety reasoning as q31). --
@@ -115,7 +115,7 @@ object CosmapDomain {
     *
     * Band plan: the broadcast nested-loop plan evaluates
     * |catalog| x |samples| separations and is bound by the scan's
-    * partition count; the 0.25-degree band equi-join prunes pairs and
+    * partition count; the sky-cell equi-join (0.25° cells) prunes pairs and
     * parallelizes on the shuffle key (band==broadcast equivalence is
     * property-tested in ConeJoinSpec). */
   def quickstartRaw(s: SparkSession, dir: String): DataFrame = {

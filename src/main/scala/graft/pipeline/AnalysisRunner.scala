@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.config.ConfigTree
 import graft.config.ConfigTree.Tree
 import graft.domain.{SkyBounds, SphereSampler}
-import graft.plans.ConeJoin
+import graft.plans.{ConeJoin, RectJoin, SkyCells}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The `cosmap run <config.json>` equivalent: one entry point that
@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  4. sampler draws N circles (sampler.py:127-144) — here a
   *     `spark.range` source, no driver materialization
   *  5. the per-sample cone search + per-sample transformation loop
-  *     (task.py:125-188) becomes: cone join (broadcast or band plan)
+  *     (task.py:125-188) becomes: cone join (broadcast or sky-cell plan)
   *     + the Main-block DAG compiled over the joined DataFrame —
   *     transformations see the data kind "catalog" with a
   *     `sample_id` column and aggregate per sample instead of
@@ -192,14 +192,18 @@ object AnalysisRunner {
     if (demanded.contains("catalog")) {
       val joined = plugins.get(PluginSlots.GenerateTasks)
         .map(f => f(catalog, samples, sampling))
-        .getOrElse(sampling.shape match {
-          case SampleShape.Circle(_) =>
-            if (useBandJoin) ConeJoin.bandJoin(catalog, samples)
-            else ConeJoin.broadcastJoin(catalog, samples)
-          case SampleShape.Rect(_, _) =>
-            if (useBandJoin) graft.plans.RectJoin.bandJoin(catalog, samples)
-            else graft.plans.RectJoin.broadcastJoin(catalog, samples)
-        })
+        .getOrElse {
+          // cells 3 × the reach: a sample covers 1–2 cells per axis
+          val cell = SkyCells.cellDeg(sampling.radiusDeg)
+          sampling.shape match {
+            case SampleShape.Circle(_) =>
+              if (useBandJoin) ConeJoin.bandJoin(catalog, samples, cell)
+              else ConeJoin.broadcastJoin(catalog, samples)
+            case SampleShape.Rect(_, _) =>
+              if (useBandJoin) RectJoin.bandJoin(catalog, samples, cell)
+              else RectJoin.broadcastJoin(catalog, samples)
+          }
+        }
       data += ("catalog" -> joined)
     }
     DagCompiler.runPipeline(main, registry,

@@ -19,15 +19,19 @@ import org.apache.spark.sql.functions._
   *    side, predicate evaluated in codegen. At 100 TB the catalog
   *    side streams; only the sample table must fit in memory.
   *
-  *  - [[bandJoin]]: rewrite of the theta-join into an *equi-join* on a
-  *    declination-band key (the generalization of the reference's
-  *    bbox prefilter, opencosmo.py:42-50, with its RA-shrink sign bug
-  *    at line 48 fixed): samples are exploded to every band their
-  *    circle overlaps, the catalog is banded by floor(dec/band), the
-  *    join runs as a hash/sort-merge equi-join with the cheap bbox
-  *    conjuncts first and the exact separation as residual. Right when
-  *    BOTH sides are large (samples no longer broadcastable) — the
-  *    shuffle is keyed and partial, never a cross product.
+  *  - [[bandJoin]]: rewrite of the theta-join into an *equi-join* on
+  *    the 2-D sky-cell key of [[SkyCells]] (the generalization of the
+  *    reference's RA/Dec bbox prefilter, opencosmo.py:42-50, with its
+  *    RA-shrink sign bug at line 48 fixed): each sample is exploded to
+  *    every (dec band, RA cell) its circle's reach covers, wrapped at
+  *    RA 0/360 and taking every cell of a band near a pole; each object
+  *    gets its own cell; the join runs as a hash/sort-merge equi-join
+  *    on one `long` key with the cheap dec-box conjuncts first and the
+  *    exact separation as residual. The cell side is `bandDeg`; 3 × the
+  *    radius keeps a sample to 1–2 cells per axis (the 0.1° default is
+  *    that rule at the paper's 2′ radius). Right when BOTH sides are
+  *    large (samples no longer broadcastable) — the shuffle is keyed
+  *    and partial, never a cross product.
   *
   * Contract: `catalog` has columns `ra`, `dec` (degrees); `samples`
   * has `sample_id`, `ra`, `dec`, `radius_deg`. Output: catalog columns
@@ -47,22 +51,14 @@ object ConeJoin {
       .withColumn("sep_deg", sep)
 
   def bandJoin(catalog: DataFrame, samples: DataFrame,
-               bandDeg: Double = 1.0): DataFrame = {
-    require(bandDeg > 0, "bandDeg must be positive")
-    val s = prepSamples(samples).withColumn("band",
-      explode(sequence(
-        floor((col("s_dec") - col("radius_deg")) / bandDeg).cast("long"),
-        floor((col("s_dec") + col("radius_deg")) / bandDeg).cast("long"))))
-    val c = catalog.withColumn("band", floor(col("dec") / bandDeg).cast("long"))
-    // cheap conjuncts first (dec band already equi-matched; dec range
-    // and wraparound-safe ra box), exact separation last
-    c.join(s, "band")
+               bandDeg: Double = SkyCells.DefaultCellDeg): DataFrame = {
+    import SkyCells.attr
+    val reach = SkyCells.coneReach(attr("s_dec"), attr("radius_deg"))
+    // cheap dec-box conjuncts first, exact separation last
+    SkyCells.join(catalog, prepSamples(samples), reach, bandDeg)
       .filter(col("dec") >= col("s_dec") - col("radius_deg") &&
         col("dec") <= col("s_dec") + col("radius_deg") &&
-        Sphere.raDelta(col("ra"), col("s_ra")) <=
-          Sphere.raPad(col("s_dec"), col("radius_deg")) &&
         sep <= col("radius_deg"))
-      .drop("band")
       .withColumn("sep_deg", sep)
   }
 

@@ -6,39 +6,45 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Optimizer rule: rewrite an inner theta-join whose condition is the
-  * declarative [[ConeContains]] predicate into the dec-band EQUI-join
-  * plan (the same rewrite `ConeJoin.bandJoin` applies by hand):
+  * declarative [[ConeContains]] (or [[RectContains]]) predicate into
+  * the sky-cell EQUI-join plan that `ConeJoin.bandJoin` and
+  * `RectJoin.bandJoin` build, from the same [[SkyCells]] cover:
   *
   * {{{
   *   Join(cat, smp, Inner, cone_contains(ra, dec, sRa, sDec, r))
   * ⇒ Project(join.output,
-  *     Filter(cone_contains(...) AND dec BETWEEN sDec ± r,   // exact residual
-  *       Join(Project(cat, band = floor(dec/B)),
-  *            Generate(explode(sequence(floor((sDec−r)/B),
-  *                                      floor((sDec+r)/B))), smp),
-  *            Inner, cat.band = smp.band)))
+  *     Filter(dec BETWEEN sDec ± r AND cone_contains(...),  // exact residual
+  *       Join(Project(cat, graft_band_cell = objectKey(ra, dec)),
+  *            SkyCells.cover(smp),   // one row per covered cell
+  *            Inner, cat.graft_band_cell = smp.graft_band_cell)))
   * }}}
   *
-  * Without the rule Spark's only strategy for the theta condition is a
-  * nested-loop join; with it, candidate generation becomes a hash/sort
-  * equi-join on the band key, with the original predicate kept as the
-  * exact residual — results identical by construction, the plan is the
-  * 100 TB shape. Band width: `spark.graft.coneJoin.bandDeg` (default
-  * 1.0). Installed by [[graft.GraftExtensions]]
+  * The key packs (dec band, RA cell whose width scales with
+  * 1/cos dec) into one `long`; the cover wraps at RA 0/360 and takes
+  * every cell of a band near a pole (see [[SkyCells]]). Without the
+  * rule Spark's only strategy for the theta condition is a nested-loop
+  * join; with it, candidate generation becomes a hash/sort equi-join on
+  * the cell key, with the original predicate kept as the exact
+  * residual — results identical by construction, the plan is the
+  * 100 TB shape. The radius is a column, so the cell side is a session
+  * setting: `spark.graft.coneJoin.bandDeg` (default
+  * `SkyCells.DefaultCellDeg`, 0.1°, sized for 2′ samples; set it to
+  * about 3 × the sample reach). Installed by [[graft.GraftExtensions]]
   * (`spark.sql.extensions=graft.GraftExtensions`).
   *
-  * Loop safety: the rewritten join's condition is a plain band
+  * Loop safety: the rewritten join's condition is a plain key
   * equality, and the rule skips joins that already carry an equality
   * conjunct — so re-matching after predicate pushdown folds the
   * residual back into the join is a no-op.
   */
 class ConeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def bandDeg: Double =
-    spark.conf.get("spark.graft.coneJoin.bandDeg", "1.0").toDouble
+  private def cellDeg: Double =
+    spark.conf.get("spark.graft.coneJoin.bandDeg",
+      SkyCells.DefaultCellDeg.toString).toDouble
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -62,26 +68,28 @@ class ConeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** The normalized shape of a rewritable spatial predicate: the
-    * object/sample dec expressions, the sample's declination REACH
-    * (cone radius, or rect height/2), and the two sides' reference
-    * sets. */
-  private case class Spatial(dec: Expression, sDec: Expression,
-                             reach: Expression,
+    * object/sample coordinate expressions, the sample's [[SkyCells]]
+    * reach, and the two sides' reference sets. */
+  private case class Spatial(ra: Expression, dec: Expression,
+                             sRa: Expression, sDec: Expression,
+                             reach: SkyCells.Reach,
                              objRefs: AttributeSet, smpRefs: AttributeSet)
 
-  /** The band restriction is only sound when the spatial predicate
+  /** The cell restriction is only sound when the spatial predicate
     * must hold for every surviving row — i.e. it is a TOP-LEVEL
     * CONJUNCT. One nested under OR/NOT must not trigger the rewrite
-    * (restricting candidates to band matches would drop rows the
+    * (restricting candidates to cell matches would drop rows the
     * other disjunct admits). */
   private def conjunctiveSpatial(cond: Expression): Option[Spatial] =
     conjuncts(cond).collectFirst {
       case c: ConeContains if c.children.forall(_.dataType == DoubleType) =>
-        Spatial(c.dec, c.sDec, c.radiusDeg,
+        Spatial(c.ra, c.dec, c.sRa, c.sDec,
+          SkyCells.coneReach(c.sDec, c.radiusDeg),
           c.ra.references ++ c.dec.references,
           c.sRa.references ++ c.sDec.references ++ c.radiusDeg.references)
       case r: RectContains if r.children.forall(_.dataType == DoubleType) =>
-        Spatial(r.dec, r.sDec, Divide(r.heightDeg, Literal(2.0, DoubleType)),
+        Spatial(r.ra, r.dec, r.sRa, r.sDec,
+          SkyCells.rectReach(r.sDec, r.widthDeg, r.heightDeg),
           r.ra.references ++ r.dec.references,
           r.sRa.references ++ r.sDec.references ++
             r.widthDeg.references ++ r.heightDeg.references)
@@ -109,32 +117,22 @@ class ConeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         (right, left, false)
       else return None
 
-    val bWidth = Literal(bandDeg, DoubleType)
-    // samples: explode to every covered band
-    val bandS = AttributeReference("graft_band_s", LongType, nullable = false)()
-    val lo = Floor(Divide(Subtract(cc.sDec, cc.reach), bWidth))
-    val hi = Floor(Divide(Add(cc.sDec, cc.reach), bWidth))
-    // timeZoneId must be concrete: a TimeZoneAwareExpression with None
-    // is unresolved, and optimizer rules may not un-resolve the plan
-    val seq = Sequence(lo, hi, None,
-      Some(spark.sessionState.conf.sessionLocalTimeZone))
-    val genSamples = Generate(Explode(seq),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(bandS), child = samples)
-    // catalog: its own band
-    val bandCAlias = Alias(Floor(Divide(cc.dec, bWidth)), "graft_band_c")()
-    val projCatalog = Project(catalog.output :+ bandCAlias, catalog)
+    val (covered, keyS) = SkyCells.cover(samples, cc.sRa, cc.sDec, cc.reach,
+      cellDeg, spark.sessionState.conf.sessionLocalTimeZone)
+    val keyCAlias = Alias(SkyCells.objectKey(cc.ra, cc.dec, cellDeg),
+      SkyCells.KeyName)()
+    val keyed = Project(catalog.output :+ keyCAlias, catalog)
     val (newLeft, newRight) =
-      if (catalogIsLeft) (projCatalog, genSamples) else (genSamples, projCatalog)
-    val bandEq = EqualTo(bandCAlias.toAttribute, bandS)
+      if (catalogIsLeft) (keyed, covered) else (covered, keyed)
     // cheap dec-box conjuncts first, the exact predicate (and any other
     // original conjuncts) as residual
     val decBox = And(
-      GreaterThanOrEqual(cc.dec, Subtract(cc.sDec, cc.reach)),
-      LessThanOrEqual(cc.dec, Add(cc.sDec, cc.reach)))
+      GreaterThanOrEqual(cc.dec, Subtract(cc.sDec, cc.reach.dec)),
+      LessThanOrEqual(cc.dec, Add(cc.sDec, cc.reach.dec)))
     val rewritten = Project(j.output,
       Filter(And(decBox, cond),
-        Join(newLeft, newRight, Inner, Some(bandEq), hint)))
+        Join(newLeft, newRight, Inner,
+          Some(EqualTo(keyCAlias.toAttribute, keyS)), hint)))
     Some(rewritten)
   }
 }

@@ -22,9 +22,13 @@ import org.apache.spark.sql.functions._
   * Plans mirror the cone join exactly:
   *  - [[broadcastJoin]]: catalog ⋈ broadcast(samples) under the raw
   *    predicate — the 10³-samples-vs-10⁶⁺-objects regime.
-  *  - [[bandJoin]]: dec-band equi-join rewrite for when both sides
-  *    are large; bbox conjuncts first, keyed shuffle, never a cross
-  *    product.
+  *  - [[bandJoin]]: equi-join on the 2-D sky-cell key of
+  *    [[SkyCells]] for when both sides are large: each sample is
+  *    exploded to the (dec band, RA cell)s of its height/2 and its RA
+  *    reach (width/2)/cos(s_dec), wrapped at RA 0/360 and taking every
+  *    cell of a band near a pole; the exact membership is the residual.
+  *    The cell side is `bandDeg`; 3 × the circumradius keeps a sample
+  *    to 1–2 cells per axis.
   *
   * Output: catalog columns + `sample_id`, `s_ra`, `s_dec`,
   * `width_deg`, `height_deg`, `sep_deg` (angular separation to the
@@ -51,16 +55,12 @@ object RectJoin {
       .withColumn("sep_deg", sep)
 
   def bandJoin(catalog: DataFrame, samples: DataFrame,
-               bandDeg: Double = 1.0): DataFrame = {
-    require(bandDeg > 0, "bandDeg must be positive")
-    val s = prepSamples(samples).withColumn("band",
-      explode(sequence(
-        floor((col("s_dec") - col("height_deg") / 2) / bandDeg).cast("long"),
-        floor((col("s_dec") + col("height_deg") / 2) / bandDeg).cast("long"))))
-    val c = catalog.withColumn("band", floor(col("dec") / bandDeg).cast("long"))
-    c.join(s, "band")
+               bandDeg: Double = SkyCells.DefaultCellDeg): DataFrame = {
+    import SkyCells.attr
+    val reach =
+      SkyCells.rectReach(attr("s_dec"), attr("width_deg"), attr("height_deg"))
+    SkyCells.join(catalog, prepSamples(samples), reach, bandDeg)
       .filter(inside)
-      .drop("band")
       .withColumn("sep_deg", sep)
   }
 }

@@ -34,4 +34,15 @@ class BenchAuditSpec extends AnyFunSuite {
     assert(Bench.parsePins("") === Map.empty)
     assert(Bench.suspects(Seq("q44" -> 23.97), Map.empty) === Seq.empty)
   }
+
+  test("a failed query makes the suite total null and is named, never dropped") {
+    val best = Seq("q01" -> 1.5, "q02" -> -1.0, "q03" -> 2.25)
+    assert(Bench.totalJson(best) === "null")
+    assert(Bench.totalsJson(best) ===
+      "\"n_failed\":1,\"failed\":[\"q02\"],\"total_ok\":3.750000,\"total_best\":null")
+    val clean = Seq("q01" -> 1.5, "q03" -> 2.25)
+    assert(Bench.totalJson(clean) === "3.750000")
+    assert(Bench.totalsJson(clean) ===
+      "\"n_failed\":0,\"failed\":[],\"total_ok\":3.750000,\"total_best\":3.750000")
+  }
 }

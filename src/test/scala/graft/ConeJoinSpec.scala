@@ -170,4 +170,133 @@ class ConeJoinSpec extends SparkSpec {
       assert(ra - raExt >= bounds.raMin && ra + raExt <= bounds.raMax, (ra, dec))
     }
   }
+
+  // ---- Sky-cell cover edge cases (cones and rectangles) -------------
+
+  private def sepDegBF(ra1: Double, dec1: Double, ra2: Double, dec2: Double): Double = {
+    val h = math.pow(math.sin(math.toRadians(dec2 - dec1) / 2), 2) +
+      math.cos(math.toRadians(dec1)) * math.cos(math.toRadians(dec2)) *
+        math.pow(math.sin(math.toRadians(ra2 - ra1) / 2), 2)
+    math.toDegrees(2 * math.asin(math.min(1.0, math.sqrt(h))))
+  }
+
+  private def raDeltaBF(a: Double, b: Double): Double = {
+    val d = math.abs(a - b) % 360.0
+    math.min(d, 360.0 - d)
+  }
+
+  /** RA cells in the band holding `dec`, by the [[graft.plans.SkyCells]]
+    * rule (poleward edge, clamped to 90°). */
+  private def nRaBF(dec: Double, cell: Double): Long = {
+    val b = math.floor(dec / cell)
+    val edge = math.min(90.0, math.max(math.abs(b * cell), math.abs((b + 1) * cell)))
+    math.max(1L, math.floor(360.0 * math.cos(math.toRadians(edge)) / cell).toLong)
+  }
+
+  /** A seeded catalog around each centre: scattered objects within
+    * `spread` on the sky (every RA once near a pole), plus objects on
+    * the `cell` lattice (band edges × RA cell edges) near the centre. */
+  private def patches(centres: Seq[(Double, Double)], spread: Double,
+                      cell: Double): DataFrame = {
+    import spark.implicits._
+    val rng = new scala.util.Random(17)
+    def wrap(ra: Double) = ((ra % 360.0) + 360.0) % 360.0
+    def clampDec(d: Double) = math.max(-90.0, math.min(90.0, d))
+    val pts = centres.flatMap { case (ra, dec) =>
+      val raSpan =
+        if (math.abs(dec) + spread >= 89.0) 180.0
+        else spread / math.cos(math.toRadians(math.abs(dec) + spread))
+      val scattered = Seq.fill(400)((
+        wrap(ra + (rng.nextDouble() * 2 - 1) * raSpan),
+        clampDec(dec + (rng.nextDouble() * 2 - 1) * spread)))
+      val lattice = for {
+        m <- (math.floor((dec - spread) / cell).toLong to
+          math.ceil((dec + spread) / cell).toLong).take(40)
+        d = clampDec(m * cell)
+        n = nRaBF(d, cell)
+        k <- (math.floor((ra - raSpan) * n / 360.0).toLong to
+          math.ceil((ra + raSpan) * n / 360.0).toLong).take(40)
+      } yield (wrap(k * 360.0 / n), d)
+      scattered ++ lattice
+    }
+    pts.zipWithIndex.map { case ((ra, dec), i) => (i.toLong, ra, dec) }
+      .toDF("object_id", "ra", "dec")
+  }
+
+  private def objects(cat: DataFrame): Seq[(Long, Double, Double)] =
+    cat.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+
+  /** Cone and rectangle cell joins at each cell side ≡ driver-side
+    * brute force over the same rows; every case must have pairs. */
+  private def assertCoverExact(centres: Seq[(Double, Double)], radius: Double,
+                               width: Double, height: Double,
+                               cells: Seq[Double]): Unit = {
+    import graft.plans.RectJoin
+    import spark.implicits._
+    val cat = patches(centres, 2 * math.max(radius, height), cells.min)
+    val objs = objects(cat)
+    val cones = centres.zipWithIndex.map { case ((ra, dec), i) =>
+      (i.toLong, ra, dec, radius) }
+    val rects = centres.zipWithIndex.map { case ((ra, dec), i) =>
+      (i.toLong, ra, dec, width, height) }
+    val wantCone = (for {
+      (oid, ra, dec) <- objs
+      (sid, sra, sdec, r) <- cones
+      if sepDegBF(ra, dec, sra, sdec) <= r
+    } yield (sid, oid)).toSet
+    val wantRect = (for {
+      (oid, ra, dec) <- objs
+      (sid, sra, sdec, w, h) <- rects
+      if math.abs(dec - sdec) <= h / 2 &&
+        raDeltaBF(ra, sra) * math.cos(math.toRadians(sdec)) <= w / 2
+    } yield (sid, oid)).toSet
+    assert(cones.forall(c => wantCone.exists(_._1 == c._1)), "a cone is empty")
+    assert(rects.forall(c => wantRect.exists(_._1 == c._1)), "a rectangle is empty")
+    val coneDf = cones.toDF("sample_id", "ra", "dec", "radius_deg")
+    val rectDf = rects.toDF("sample_id", "ra", "dec", "width_deg", "height_deg")
+    for (cell <- cells) {
+      assert(key(ConeJoin.bandJoin(cat, coneDf, cell)) === wantCone, s"cone cell=$cell")
+      assert(key(RectJoin.bandJoin(cat, rectDf, cell)) === wantRect, s"rect cell=$cell")
+    }
+  }
+
+  test("sky cells narrower than the radius (0.01°, 0.05°) ≡ brute force") {
+    assertCoverExact(
+      Seq((10.0, 0.0), (123.4, -37.2), (250.0, 61.5), (0.02, 5.0), (359.97, -5.0)),
+      radius = 0.08, width = 0.2, height = 0.12, cells = Seq(0.01, 0.05))
+  }
+
+  test("sample centres exactly on sky-cell corners ≡ brute force") {
+    for (cell <- Seq(0.1, 0.05)) {
+      val corners = Seq((3L, 41L), (-120L, 7L), (700L, 2L), (0L, 0L), (-1L, 100L))
+        .map { case (m, k) =>
+          val dec = m * cell
+          (k * 360.0 / nRaBF(dec, cell), dec)
+        }
+      assertCoverExact(corners, radius = 0.0337, width = 0.061, height = 0.043,
+        cells = Seq(cell, 3 * 0.0337))
+    }
+  }
+
+  test("sample centres on the RA 0/360 seam ≡ brute force") {
+    assertCoverExact(
+      Seq((0.0, 0.0), (360.0, 12.5), (1e-12, -30.0), (359.9999999999, 45.0),
+        (0.0, -70.0)),
+      radius = 0.0337, width = 0.061, height = 0.043,
+      cells = Seq(0.1, 0.05, 0.01))
+  }
+
+  test("sample centres at |dec| ≥ 89.9° (one RA cell per band) ≡ brute force") {
+    val centres = Seq((10.0, 89.9), (200.0, 89.95), (300.0, 89.99), (0.0, 90.0),
+      (45.0, -89.9), (135.0, -89.97), (0.0, -90.0))
+    assertCoverExact(centres, radius = 0.0337, width = 0.061, height = 0.043,
+      cells = Seq(0.1, 0.01))
+    // at the 0.1° default, the bands above 89.9° hold a single RA cell
+    val polar = graft.plans.SkyCells.keyObjects(
+        patches(centres, 0.07, 0.1), 0.1)
+      .filter(abs(col("dec")) >= 89.91)
+      .select(pmod(col(graft.plans.SkyCells.KeyName), lit(1L << 32)).as("ra_cell"))
+      .distinct().collect().map(_.getLong(0))
+    assert(polar.toSeq === Seq(0L))
+  }
 }

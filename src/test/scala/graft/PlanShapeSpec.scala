@@ -64,6 +64,42 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("quickstart analysis: the cone join is a broadcast hash join on the one sky-cell key") {
+    val runConfig =
+      """{"base-analysis": "quickstart",
+        | "sampling_parameters": {
+        |   "region_type": "Rectangle",
+        |   "region_bounds": {"value": [31.0, -11.0, 38, -4], "units": "degree"},
+        |   "sample_type": "Random", "n_samples": 1000, "seed": 42},
+        | "radius": {"value": 2, "units": "arcmin"},
+        | "min_radius": {"value": 5, "units": "arcsec"}}""".stripMargin
+    val defaults =
+      """{"sampling_parameters": {
+        |   "sample_shape": "Circle", "sample_dimensions": "@Main.radius"}}""".stripMargin
+    val transformations =
+      """{"Main": {
+        |  "compute_distances": {"needed-data": ["catalog"]},
+        |  "compute_result": {
+        |    "dependencies": {"compute_distances": "catalog"},
+        |    "needed-data": ["samples"],
+        |    "needed-parameters": ["Main.min_radius"],
+        |    "is-output": true}}}""".stripMargin
+    val p = pipeline.AnalysisRunner.run(spark, runConfig, defaults, transformations,
+        cli.StandardTransforms.registry,
+        operators.CosmapDomain.quickstartCatalog(spark, sf0001), useBandJoin = true)
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!p.contains("transform("), p)
+    // the cone join: broadcast, keyed on the packed cell key alone
+    val keys = "Left keys \\[(\\d+)\\]: \\[graft_band_cell".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(keys === Seq("1"), p)
+    val coneJoin = p.linesIterator.toSeq.reverse
+      .dropWhile(!_.startsWith("Left keys [1]: [graft_band_cell"))
+      .find(_.matches("\\(\\d+\\) \\w+Join.*")).getOrElse("")
+    assert(coneJoin.contains("BroadcastHashJoin"), p)
+  }
+
   test("q44: shingles via the codegen'd kernel; candidate join is an equi-join") {
     val p = executedPlan("q44_ngram_jaccard")
     // the custom WordNGrams expression, not interpreted HOF lambdas
