@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * (`spark.sql.extensions=graft.GraftExtensions`): installs the
   * engine's Catalyst extensions into any SparkSession — currently the
   * [[graft.plans.ConeJoinRewrite]] optimizer rule turning declarative
-  * `cone_contains` theta joins into band equi-joins. Custom scalar
+  * `cone_contains`/`rect_contains` theta joins into sky-cell
+  * equi-joins (`ConeJoin.bandJoin` applies the same rewrite without
+  * it). Custom scalar
   * kernels (minhash/simhash/cosine/n-grams) need no registration;
   * they are plain Column functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,12 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for tools/check_oracle.py's DuckDB compare.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir> [query ...]"
+  *
+  * Query names after the two directories restrict the sweep, and the
+  * oracle file, to those queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args(2+) (dev only): restrict the sweep to the named queries —
-    // the driver always calls with exactly (sfDir, outDir)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -45,6 +48,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

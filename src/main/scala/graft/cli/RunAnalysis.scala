@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * (/root/reference/src/cosmap/entrypoint.py:46-60 →
   * /root/reference/src/cosmap/api/cmds.py:20-47), end to end:
   * registry lookup of `base-analysis`, config merge, sampler, cone
-  * join (the sky-cell equi-join, `useBandJoin = true`), compiled DAG,
+  * join (the sky-cell equi-join, `AnalysisRunner`'s default), compiled DAG,
   * append sink, progress + count accounting.
   *
   * Usage: RunAnalysis <runConfig.json> <catalogParquet> [registryDir]
@@ -43,8 +43,7 @@ object RunAnalysis {
     try {
       val catalog = spark.read.parquet(catalogPath)
       val out = AnalysisRunner.runParsed(spark, runConfig,
-        ConfigTree.parse(defaults), transformations, registry, catalog,
-        useBandJoin = true, plugins = graft.pipeline.PluginManager.empty)
+        ConfigTree.parse(defaults), transformations, registry, catalog)
       val expected = AnalysisRunner.parseSampling(
         AnalysisRunner.effectiveConfig(runConfig, ConfigTree.parse(defaults)))
         .nSamples

@@ -36,8 +36,9 @@ object SphereSampler {
   def frameRect(bounds: SkyBounds, halfWidthDeg: Double,
                 halfHeightDeg: Double): SkyBounds = {
     val maxAbsDec = math.max(math.abs(bounds.decMin), math.abs(bounds.decMax))
-    val edge = math.min(89.9, maxAbsDec + halfHeightDeg)
-    val raPad = halfWidthDeg / math.cos(math.toRadians(edge))
+    // every RA once the footprint comes within 0.1° of a pole, where
+    // halfWidth/cos(edge) stops bounding a circle's RA extent
+    val raPad = Sphere.raPadDeg(maxAbsDec + halfHeightDeg, halfWidthDeg)
     if (bounds.raMax - bounds.raMin <= 2 * raPad ||
         bounds.decMax - bounds.decMin <= 2 * halfHeightDeg)
       throw new IllegalArgumentException(

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, graftbridge}
 import org.apache.spark.sql.catalyst.expressions.{Abs, Add, Cos, Divide, Expression,
   GreaterThanOrEqual, If, Least, Literal, ToRadians}
-import org.apache.spark.sql.functions._
 
 /** Spherical-geometry column algebra.
   *
@@ -13,11 +12,11 @@ import org.apache.spark.sql.functions._
   * /root/reference/README.md:62-66; the engine passes the region into
   * every transformation at /root/reference/src/cosmap/analysis/task.py:185).
   *
-  * Design decision (SURVEY.md §7): these are *compositions of built-in
-  * Catalyst expressions*, not UDFs and not a custom Expression — every
-  * function here stays inside WholeStageCodegen and is visible to the
-  * optimizer (constant folding, CSE). A custom `Expression` would buy
-  * nothing: the built-ins already express the math.
+  * Design decision (SURVEY.md §7): no UDFs — every function here
+  * stays inside WholeStageCodegen and is visible to the optimizer.
+  * The separation is the codegen'd `AngularSepDeg` expression over the
+  * one haversine kernel the cone joins' membership predicate also
+  * calls; the RA pad is a composition of built-in Catalyst expressions.
   */
 object Sphere {
 
@@ -37,22 +36,15 @@ object Sphere {
     SplitMix64.uniform(id, salt)
 
   /** Great-circle separation in degrees between (ra1,dec1) and
-    * (ra2,dec2), all in degrees — haversine form, numerically stable
-    * at small separations (the arccos form loses precision exactly in
-    * the reference's regime of arcminute-scale radii). `least(1.0, …)`
-    * guards asin domain error from rounding at antipodes. */
-  def angularSepDeg(ra1: Column, dec1: Column, ra2: Column, dec2: Column): Column = {
-    val sinDLat = sin(radians(dec2 - dec1) / 2)
-    val sinDLon = sin(radians(ra2 - ra1) / 2)
-    val h = sinDLat * sinDLat +
-      cos(radians(dec1)) * cos(radians(dec2)) * sinDLon * sinDLon
-    degrees(asin(least(lit(1.0), sqrt(h))) * 2)
-  }
-
-  /** Minimal absolute RA difference in degrees, wraparound-safe:
-    * |Δra| mapped into [0, 180]. */
-  def raDelta(ra1: Column, ra2: Column): Column =
-    abs(pmod(ra1 - ra2 + lit(180.0), lit(360.0)) - lit(180.0))
+    * (ra2,dec2), all in degrees — the haversine kernel
+    * `ConeContainsKernel.sepDeg` (numerically stable at small
+    * separations, where the arccos form loses precision exactly in the
+    * reference's regime of arcminute-scale radii), the same one the
+    * cone joins' membership predicate evaluates. */
+  def angularSepDeg(ra1: Column, dec1: Column, ra2: Column, dec2: Column): Column =
+    graftbridge.toColumn(AngularSepDeg(graftbridge.toExpression(ra1),
+      graftbridge.toExpression(dec1), graftbridge.toExpression(ra2),
+      graftbridge.toExpression(dec2)))
 
   /** Safe half-width of the RA interval covered by a cone of
     * `radiusDeg` centered at declination `decDeg`: the linear bound
@@ -69,7 +61,18 @@ object Sphere {
   /** [[raPad]] as a Catalyst expression, for plan rewrites. */
   def raPadExpr(decDeg: Expression, radiusDeg: Expression): Expression = {
     val edge = Add(Abs(decDeg), radiusDeg)
-    If(GreaterThanOrEqual(edge, Literal(89.9)), Literal(180.0),
+    If(GreaterThanOrEqual(edge, Literal(PolarEdgeDeg)), Literal(180.0),
       Least(Seq(Literal(180.0), Divide(radiusDeg, Cos(ToRadians(edge))))))
   }
+
+  /** The [[raPadExpr]] rule on plain doubles, for a footprint of RA
+    * half-width `halfWidthDeg` whose poleward edge is at |dec|
+    * `edgeDeg`: 180° once the edge is within 0.1° of a pole, else
+    * min(180°, halfWidth / cos(edge)). */
+  def raPadDeg(edgeDeg: Double, halfWidthDeg: Double): Double =
+    if (edgeDeg >= PolarEdgeDeg) 180.0
+    else math.min(180.0, halfWidthDeg / math.cos(math.toRadians(edgeDeg)))
+
+  /** The |dec| from which an RA pad is taken as every RA. */
+  private val PolarEdgeDeg = 89.9
 }

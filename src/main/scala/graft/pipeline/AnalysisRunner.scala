@@ -139,7 +139,7 @@ object AnalysisRunner {
   def run(spark: SparkSession, runConfigJson: String,
           analysisDefaultsJson: String, transformationsJson: String,
           registry: TransformRegistry, catalog: DataFrame,
-          useBandJoin: Boolean = false,
+          useBandJoin: Boolean = true,
           plugins: PluginManager = PluginManager.empty): DataFrame =
     runParsed(spark, ConfigTree.parse(runConfigJson),
       ConfigTree.parse(analysisDefaultsJson), transformationsJson,
@@ -150,7 +150,8 @@ object AnalysisRunner {
   def runParsed(spark: SparkSession, runConfig: Tree,
                 analysisDefaults: Tree, transformationsJson: String,
                 registry: TransformRegistry, catalog: DataFrame,
-                useBandJoin: Boolean, plugins: PluginManager): DataFrame = {
+                useBandJoin: Boolean = true,
+                plugins: PluginManager = PluginManager.empty): DataFrame = {
     val cfg = effectiveConfig(runConfig, analysisDefaults)
     val blocks = PipelineSpec.fromJson(transformationsJson)
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.Sphere
+import graft.functions.{ConeContainsFn, Sphere}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,31 +11,36 @@ import org.apache.spark.sql.functions._
   * as a per-sample spatial-index probe loop
   * (/root/reference/src/cosmap/dataset/opencosmo.py:38-54 driven by
   * /root/reference/src/cosmap/analysis/task.py:149-154). Re-expressed
-  * here as two declarative Spark plans (SURVEY.md §2.3):
+  * here as the declarative `cone_contains` join (the
+  * [[graft.functions.ConeContains]] predicate over the one membership
+  * kernel), planned two ways (SURVEY.md §2.3):
   *
   *  - [[broadcastJoin]]: catalog ⋈ broadcast(samples) under the raw
-  *    theta predicate. Right for the cosmap regime (10³ samples vs
-  *    10⁶⁺ objects): one pass over the catalog, no shuffle of the big
-  *    side, predicate evaluated in codegen. At 100 TB the catalog
-  *    side streams; only the sample table must fit in memory.
+  *    theta predicate — a nested-loop join, the reference plan the
+  *    cell join is checked against (in a session without
+  *    `GraftExtensions`; with it, the rule turns this join into the
+  *    cell join too).
   *
-  *  - [[bandJoin]]: rewrite of the theta-join into an *equi-join* on
-  *    the 2-D sky-cell key of [[SkyCells]] (the generalization of the
-  *    reference's RA/Dec bbox prefilter, opencosmo.py:42-50, with its
-  *    RA-shrink sign bug at line 48 fixed): each sample is exploded to
-  *    every (dec band, RA cell) its circle's reach covers, wrapped at
-  *    RA 0/360 and taking every cell of a band near a pole; each object
-  *    gets its own cell; the join runs as a hash/sort-merge equi-join
-  *    on one `long` key with the cheap dec-box conjuncts first and the
-  *    exact separation as residual. The cell side is `bandDeg`; 3 × the
-  *    radius keeps a sample to 1–2 cells per axis (the 0.1° default is
-  *    that rule at the paper's 2′ radius). Right when BOTH sides are
-  *    large (samples no longer broadcastable) — the shuffle is keyed
-  *    and partial, never a cross product.
+  *  - [[bandJoin]]: the same join handed to [[ConeJoinRewrite]], the
+  *    one construction of the sky-cell equi-join of [[SkyCells]] (the
+  *    generalization of the reference's RA/Dec bbox prefilter,
+  *    opencosmo.py:42-50, with its RA-shrink sign bug at line 48
+  *    fixed): each sample is exploded to every (dec band, RA cell) its
+  *    circle's reach covers, wrapped at RA 0/360 and taking every cell
+  *    of a band near a pole; each object gets its own cell; the join
+  *    runs as a hash equi-join on one `long` key with the cheap dec-box
+  *    conjuncts first and `cone_contains` as the exact residual. The
+  *    cell side is `bandDeg`; 3 × the radius keeps a sample to 1–2
+  *    cells per axis (the 0.1° default is that rule at the paper's 2′
+  *    radius). The rewrite is applied directly, so it needs no session
+  *    extension. Broadcast while the samples are small, a keyed
+  *    partial shuffle when both sides are large — never a cross
+  *    product.
   *
   * Contract: `catalog` has columns `ra`, `dec` (degrees); `samples`
   * has `sample_id`, `ra`, `dec`, `radius_deg`. Output: catalog columns
-  * + `sample_id`, `s_ra`, `s_dec`, `radius_deg`, `sep_deg`.
+  * + `sample_id`, `s_ra`, `s_dec`, `radius_deg`, `sep_deg` (by the
+  * same haversine kernel).
   */
 object ConeJoin {
 
@@ -43,24 +48,20 @@ object ConeJoin {
     samples.select(col("sample_id"), col("ra").as("s_ra"),
       col("dec").as("s_dec"), col("radius_deg"))
 
+  private val contains: Column = ConeContainsFn.coneContains(
+    col("ra"), col("dec"), col("s_ra"), col("s_dec"), col("radius_deg"))
+
   private val sep: Column =
     Sphere.angularSepDeg(col("ra"), col("dec"), col("s_ra"), col("s_dec"))
 
   def broadcastJoin(catalog: DataFrame, samples: DataFrame): DataFrame =
-    catalog.join(broadcast(prepSamples(samples)), sep <= col("radius_deg"))
+    catalog.join(broadcast(prepSamples(samples)), contains)
       .withColumn("sep_deg", sep)
 
   def bandJoin(catalog: DataFrame, samples: DataFrame,
-               bandDeg: Double = SkyCells.DefaultCellDeg): DataFrame = {
-    import SkyCells.attr
-    val reach = SkyCells.coneReach(attr("s_dec"), attr("radius_deg"))
-    // cheap dec-box conjuncts first, exact separation last
-    SkyCells.join(catalog, prepSamples(samples), reach, bandDeg)
-      .filter(col("dec") >= col("s_dec") - col("radius_deg") &&
-        col("dec") <= col("s_dec") + col("radius_deg") &&
-        sep <= col("radius_deg"))
+               bandDeg: Double = SkyCells.DefaultCellDeg): DataFrame =
+    ConeJoinRewrite.cellJoin(catalog.join(prepSamples(samples), contains), bandDeg)
       .withColumn("sep_deg", sep)
-  }
 
   /** The reference quickstart's per-sample reduction
     * (/root/reference/README.md:55-174): drop objects closer than

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.Sphere
+import graft.functions.{ConeContainsFn, Sphere}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,25 +10,23 @@ import org.apache.spark.sql.functions._
   * implementing it here EXCEEDS the reference per the round-1 verdict
   * stretch item).
   *
-  * Membership: object (ra, dec) is inside the rectangle sample
+  * Membership ([[graft.functions.RectContains]], the one rectangle
+  * kernel): object (ra, dec) is inside the rectangle sample
   * (s_ra, s_dec, width_deg, height_deg) iff
   *   |dec − s_dec| ≤ height/2  AND
-  *   raDelta(ra, s_ra) · cos(s_dec) ≤ width/2
+  *   wrapped RA distance(ra, s_ra) · cos(s_dec) ≤ width/2
   * i.e. the height is a declination extent and the width a PHYSICAL
-  * angular extent measured at the sample's declination (wraparound-
-  * safe in RA). Both predicates are cheap column algebra — no
-  * iterative math — so they run entirely inside codegen.
+  * angular extent measured at the sample's declination.
   *
   * Plans mirror the cone join exactly:
   *  - [[broadcastJoin]]: catalog ⋈ broadcast(samples) under the raw
-  *    predicate — the 10³-samples-vs-10⁶⁺-objects regime.
-  *  - [[bandJoin]]: equi-join on the 2-D sky-cell key of
-  *    [[SkyCells]] for when both sides are large: each sample is
-  *    exploded to the (dec band, RA cell)s of its height/2 and its RA
-  *    reach (width/2)/cos(s_dec), wrapped at RA 0/360 and taking every
-  *    cell of a band near a pole; the exact membership is the residual.
-  *    The cell side is `bandDeg`; 3 × the circumradius keeps a sample
-  *    to 1–2 cells per axis.
+  *    `rect_contains` predicate — the nested-loop reference plan.
+  *  - [[bandJoin]]: the same join handed to [[ConeJoinRewrite]]: each
+  *    sample is exploded to the [[SkyCells]] (dec band, RA cell)s of
+  *    its height/2 and its RA reach (width/2)/cos(s_dec), wrapped at RA
+  *    0/360 and taking every cell of a band near a pole; the exact
+  *    membership is the residual. The cell side is `bandDeg`; 3 × the
+  *    circumradius keeps a sample to 1–2 cells per axis.
   *
   * Output: catalog columns + `sample_id`, `s_ra`, `s_dec`,
   * `width_deg`, `height_deg`, `sep_deg` (angular separation to the
@@ -42,25 +40,18 @@ object RectJoin {
     samples.select(col("sample_id"), col("ra").as("s_ra"),
       col("dec").as("s_dec"), col("width_deg"), col("height_deg"))
 
+  private val contains: Column = ConeContainsFn.rectContains(col("ra"),
+    col("dec"), col("s_ra"), col("s_dec"), col("width_deg"), col("height_deg"))
+
   private val sep: Column =
     Sphere.angularSepDeg(col("ra"), col("dec"), col("s_ra"), col("s_dec"))
 
-  private val inside: Column =
-    abs(col("dec") - col("s_dec")) <= col("height_deg") / 2 &&
-      Sphere.raDelta(col("ra"), col("s_ra")) * cos(radians(col("s_dec"))) <=
-        col("width_deg") / 2
-
   def broadcastJoin(catalog: DataFrame, samples: DataFrame): DataFrame =
-    catalog.join(broadcast(prepSamples(samples)), inside)
+    catalog.join(broadcast(prepSamples(samples)), contains)
       .withColumn("sep_deg", sep)
 
   def bandJoin(catalog: DataFrame, samples: DataFrame,
-               bandDeg: Double = SkyCells.DefaultCellDeg): DataFrame = {
-    import SkyCells.attr
-    val reach =
-      SkyCells.rectReach(attr("s_dec"), attr("width_deg"), attr("height_deg"))
-    SkyCells.join(catalog, prepSamples(samples), reach, bandDeg)
-      .filter(inside)
+               bandDeg: Double = SkyCells.DefaultCellDeg): DataFrame =
+    ConeJoinRewrite.cellJoin(catalog.join(prepSamples(samples), contains), bandDeg)
       .withColumn("sep_deg", sep)
-  }
 }

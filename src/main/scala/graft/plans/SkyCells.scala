@@ -1,16 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
-import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** The 2-D sky-cell key that every cone and rectangle join path
-  * equi-joins on: [[ConeJoin.bandJoin]], [[RectJoin.bandJoin]] and the
-  * [[ConeJoinRewrite]] optimizer rule all build their candidate join
-  * from this one definition.
+/** The 2-D sky-cell key that every cone and rectangle join equi-joins
+  * on: [[ConeJoinRewrite]], the one construction of that join (applied by
+  * [[ConeJoin.bandJoin]], [[RectJoin.bandJoin]] and the optimizer
+  * rule), keys objects with [[objectKey]] and explodes samples with
+  * [[cover]].
   *
   * Cells, for a cell side `c` in degrees:
   *  - `band = floor(dec / c)`;
@@ -34,12 +32,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Cell side: [[cellDeg]] gives 3 × the sample reach, so a sample
   * covers 1–2 cells per axis and a candidate cell holds a few times
   * the true pairs. Everything is built from Catalyst expressions, so
-  * the optimizer rule can splice it into an analyzed plan and the
-  * DataFrame joins stay in codegen. */
+  * the rewrite splices it into a plan and the join stays in codegen. */
 object SkyCells {
 
-  /** The 2-argument `bandJoin` default: [[cellDeg]] at the paper's
-    * 2′ sample radius. */
+  /** The cell side when the sample reach is not known (the 2-argument
+    * `bandJoin`, or the rule over a non-literal radius): [[cellDeg]]
+    * at the paper's 2′ sample radius. */
   val DefaultCellDeg: Double = 0.1
 
   /** Widening of every cover, in degrees. */
@@ -62,7 +60,7 @@ object SkyCells {
     Reach(radius, graft.functions.Sphere.raPadExpr(sDec, radius))
 
   /** A rectangle of on-sky `width` × `height` centred at `sDec`: the
-    * RA reach solves raDelta·cos(sDec) ≤ width/2, clamped to 180°. */
+    * RA reach solves (RA distance)·cos(sDec) ≤ width/2, clamped to 180°. */
   def rectReach(sDec: Expression, width: Expression, height: Expression): Reach =
     Reach(Divide(height, lit(2.0)),
       Least(Seq(lit(180.0),
@@ -80,7 +78,8 @@ object SkyCells {
   def cover(samples: LogicalPlan, sRa: Expression, sDec: Expression,
             reach: Reach, cellDeg: Double,
             timeZoneId: String): (LogicalPlan, Attribute) = {
-    checkCell(cellDeg)
+    // nRa ≤ 360/c must fit the 32 low bits of the key
+    require(cellDeg >= 1e-6, s"cell side must be at least 1e-6 degrees, got $cellDeg")
     def seq(lo: Expression, hi: Expression) =
       Explode(Sequence(lo, hi, None, Some(timeZoneId)))
     def generate(gen: Generator, out: Attribute, child: LogicalPlan) =
@@ -111,47 +110,6 @@ object SkyCells {
     val key = Alias(pack(bandAttr, Pmod(cellAttr, n)), KeyName)()
     (Project(samples.output :+ key, cells), key.toAttribute)
   }
-
-  /** The candidate pairs of `catalog` (columns `ra`, `dec`) and
-    * `samples` (columns `s_ra`, `s_dec` and the columns `reach` names,
-    * see [[attr]]): every (object, sample) pair that shares a cell. */
-  def join(catalog: DataFrame, samples: DataFrame, reach: Reach,
-           cellDeg: Double): DataFrame =
-    keyObjects(catalog, cellDeg)
-      .join(coverSamples(samples, reach, cellDeg), KeyName)
-      .drop(KeyName)
-
-  /** [[cover]] over a DataFrame, with the key as column [[KeyName]];
-    * column references are resolved against `samples`. */
-  private def coverSamples(samples: DataFrame, reach: Reach,
-                           cellDeg: Double): DataFrame = {
-    val spark = samples.sparkSession
-    val plan = samples.queryExecution.analyzed
-    val resolver = spark.sessionState.analyzer.resolver
-    def resolve(e: Expression): Expression = e.transformUp {
-      case u: UnresolvedAttribute =>
-        plan.resolve(u.nameParts, resolver).getOrElse(
-          throw new IllegalArgumentException(s"no column ${u.name} in the samples"))
-    }
-    val (covered, _) = cover(plan, resolve(attr("s_ra")), resolve(attr("s_dec")),
-      Reach(resolve(reach.dec), resolve(reach.ra)), cellDeg,
-      spark.sessionState.conf.sessionLocalTimeZone)
-    graftbridge.ofRows(spark, covered)
-  }
-
-  /** `catalog` with its cell key as column [[KeyName]]. */
-  def keyObjects(catalog: DataFrame, cellDeg: Double): DataFrame = {
-    checkCell(cellDeg)
-    catalog.withColumn(KeyName, graftbridge.toColumn(
-      objectKey(attr("ra"), attr("dec"), cellDeg)))
-  }
-
-  /** An as-yet unresolved column reference, for the DataFrame forms. */
-  def attr(name: String): Expression = UnresolvedAttribute.quoted(name)
-
-  private def checkCell(cellDeg: Double): Unit =
-    // nRa ≤ 360/c must fit the 32 low bits of the key
-    require(cellDeg >= 1e-6, s"cell side must be at least 1e-6 degrees, got $cellDeg")
 
   private def lit(v: Any): Literal = Literal(v)
 

@@ -98,7 +98,8 @@ class AnalysisRunnerSpec extends SparkSpec {
 
   test("band-join execution of the same analysis gives identical results") {
     val broadcastPlan = AnalysisRunner.run(spark, runConfig, analysisDefaults,
-      transformations, registry, catalog).orderBy("sample_id").collect()
+      transformations, registry, catalog, useBandJoin = false)
+      .orderBy("sample_id").collect()
     val bandPlan = AnalysisRunner.run(spark, runConfig, analysisDefaults,
       transformations, registry, catalog, useBandJoin = true)
       .orderBy("sample_id").collect()
@@ -120,7 +121,8 @@ class AnalysisRunnerSpec extends SparkSpec {
       """"radius": {"value": 2, "units": "arcmin"}""",
       """"radius": {"value": [4, 2], "units": "arcmin"}""")
     val out = AnalysisRunner.run(spark, rectConfig, rectDefaults,
-      transformations, registry, catalog).orderBy("sample_id").collect()
+      transformations, registry, catalog, useBandJoin = false)
+      .orderBy("sample_id").collect()
     assert(out.length === 1000)
     // per-sample aggregation ran on rectangle contents: some samples
     // see objects, every sample emits a row

@@ -169,6 +169,25 @@ class ConeJoinSpec extends SparkSpec {
       val raExt = (w / 2) / math.cos(math.toRadians(dec))
       assert(ra - raExt >= bounds.raMin && ra + raExt <= bounds.raMax, (ra, dec))
     }
+    // 2′ circles near the north pole: the frame either refuses the
+    // region or keeps every circle's true RA extent asin(sin r / cos dec)
+    // inside it (a pad clamped at 89.9° let circles at the top edge
+    // cross by tens of degrees)
+    val polar = SkyBounds(0, 60, 89, 89.99)
+    val r = 2.0 / 60.0
+    val circles =
+      try Some(SphereSampler.uniformCircles(spark, 2000, polar, r, seed = 1)
+        .collect().map(c => (c.getDouble(1), c.getDouble(2))))
+      catch { case e: IllegalArgumentException if e.getMessage.contains("too small") => None }
+    circles.foreach { cs =>
+      assert(cs.length === 2000)
+      cs.foreach { case (ra, dec) =>
+        assert(dec - r >= polar.decMin && dec + r <= polar.decMax, (ra, dec))
+        val s = math.sin(math.toRadians(r)) / math.cos(math.toRadians(dec))
+        val raExt = if (s >= 1) 180.0 else math.toDegrees(math.asin(s))
+        assert(ra - raExt >= polar.raMin && ra + raExt <= polar.raMax, (ra, dec))
+      }
+    }
   }
 
   // ---- Sky-cell cover edge cases (cones and rectangles) -------------
@@ -292,8 +311,10 @@ class ConeJoinSpec extends SparkSpec {
     assertCoverExact(centres, radius = 0.0337, width = 0.061, height = 0.043,
       cells = Seq(0.1, 0.01))
     // at the 0.1° default, the bands above 89.9° hold a single RA cell
-    val polar = graft.plans.SkyCells.keyObjects(
-        patches(centres, 0.07, 0.1), 0.1)
+    import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
+    val polar = patches(centres, 0.07, 0.1)
+      .withColumn(graft.plans.SkyCells.KeyName, toColumn(graft.plans.SkyCells
+        .objectKey(toExpression(col("ra")), toExpression(col("dec")), 0.1)))
       .filter(abs(col("dec")) >= 89.91)
       .select(pmod(col(graft.plans.SkyCells.KeyName), lit(1L << 32)).as("ra_cell"))
       .distinct().collect().map(_.getLong(0))

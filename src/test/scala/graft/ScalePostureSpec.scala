@@ -1,34 +1,8 @@
 package graft
 
-import graft.plans.Skew
 import org.apache.spark.sql.functions._
 
 class ScalePostureSpec extends SparkSpec {
-
-  test("salted join result equals plain join (multiplicities preserved)") {
-    val li = Tables.load(spark, sf0001, "lineitem")
-      .select(col("l_orderkey"), col("l_quantity"))
-    val o = Tables.load(spark, sf0001, "orders")
-      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-    val plain = li.join(o, Seq("l_orderkey"))
-      .groupBy("l_orderkey").agg(count(lit(1)).as("n"),
-        sum("l_quantity").as("q"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val salted = Skew.saltedJoin(li, o, "l_orderkey", salts = 8)
-      .groupBy("l_orderkey").agg(count(lit(1)).as("n"),
-        sum("l_quantity").as("q"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(salted === plain)
-  }
-
-  test("salted count equals plain count per key") {
-    val li = Tables.load(spark, sf0001, "lineitem")
-    val plain = li.groupBy("l_suppkey").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(li, "l_suppkey", salts = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(salted === plain)
-  }
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
     val s2 = spark.newSession()
